@@ -2,20 +2,50 @@
 as Arrow-batched pandas UDFs.
 
 Engine analogue of the reference's value-interop folds I4/I5
-(avroGenericReprToInternal / avroValueToGenericRepr,
-/root/reference/src/main/scala/ch/grafblutwurst/anglerfish/data/avro/
-AvroGenericInteropFAlgebras.scala:157-289,383-411): where the reference
-converts between its value tree and ``org.apache.avro`` runtime objects,
-the engine converts between decoded values and the Avro 1.x *binary wire
-format* (spec: zigzag-varint ints/longs, little-endian IEEE floats,
-length-prefixed bytes/strings, block-encoded arrays/maps, branch-index
-prefixed unions) — implemented from the public Avro specification.
+(avroGenericReprToInternal / avroValueToGenericRepr, reference
+``data/avro/AvroGenericInteropFAlgebras.scala:157-289,383-411``): where the
+reference converts between its value tree and ``org.apache.avro`` runtime
+objects, the engine converts between decoded values and the Avro 1.x
+*binary wire format* (spec: zigzag-varint ints/longs, little-endian IEEE
+floats, length-prefixed bytes/strings, block-encoded arrays/maps,
+branch-index prefixed unions) — implemented from the public Avro
+specification.  Corrupt input always raises :class:`DatumError`.
 
-The spark-avro connector is not on this classpath (pip pyspark ships
-avro-core only), so the UDF route is the supported path; on a cluster with
-spark-avro, ``sources.registry.avro_available`` gates the native
-``from_avro``/``to_avro`` instead.  The UDFs are Series→Series pandas UDFs
-(Arrow batches, not row-at-a-time Python).
+Every decode wrapper is one call into ``_build_decode``, which puts four
+choices together once per call; every encode wrapper is one call into
+``_build_encode``, whose only choice is the frame header:
+
+==================  ==========  ==============  ==========  ===================================
+framing             resolution  output          errors      public wrapper
+==================  ==========  ==============  ==========  ===================================
+raw                 no          JSON text       strict      ``avro_decode``, ``avro_decode_typed``†
+raw                 no          JSON text       permissive  ``avro_decode_permissive``
+single-object       no          JSON text       strict      ``single_object_decode``
+single-object       no          JSON text       permissive  ``single_object_decode_permissive``
+single-object       no          typed struct    strict      ``single_object_decode_typed``
+by fingerprint      per writer  JSON text       strict      ``single_object_decode_registry``
+by fingerprint      per writer  typed struct    strict      ``single_object_decode_registry_typed``
+Confluent, id map   per writer  id + JSON text  strict      ``confluent_decode_registry``
+Confluent, id map   per writer  id + JSON text  permissive  ``confluent_decode_registry_permissive``
+Confluent, id map   per writer  id + typed      strict      ``confluent_decode_registry_typed``
+Confluent, client   per writer  id + JSON text  either      ``confluent_decode_client``
+==================  ==========  ==============  ==========  ===================================
+
+==================  ===================================================
+encode header       public wrapper
+==================  ===================================================
+none                ``avro_encode``, ``avro_encode_typed``†
+single-object       ``single_object_encode``
+Confluent           ``confluent_encode``
+==================  ===================================================
+
+"single-object" accepts only the reader schema's fingerprint; "by
+fingerprint" and the Confluent framings look the writer schema up per
+message and resolve writer→reader unless the writer is the reader schema.
+† DataFrame-level: native ``from_avro``/``to_avro`` where the spark-avro
+connector is on the classpath (``sources.registry.avro_available``), else
+this codec — pip pyspark ships avro-core only, so the UDF route is the
+supported path here.
 """
 
 from __future__ import annotations
@@ -108,6 +138,48 @@ def _take(buf: bytes, pos: int, n: int) -> bytes:
     if n < 0 or pos + n > len(buf):
         raise DatumError(f"length {n} at offset {pos} overruns buffer of {len(buf)}")
     return buf[pos : pos + n]
+
+
+# Readers shared by the interpreted and the compiled decode walks, so both
+# report corrupt input as the same DatumError text (the permissive UDFs show
+# it as query output).  A ``try`` costs nothing until something raises.
+
+_unpack_float = _struct.Struct("<f").unpack_from
+_unpack_double = _struct.Struct("<d").unpack_from
+
+
+def _read_boolean(buf: bytes, pos: int) -> tuple[bool, int]:
+    try:
+        return buf[pos] == 1, pos + 1
+    except IndexError:
+        raise DatumError(f"truncated boolean at offset {pos}") from None
+
+
+def _read_float(buf: bytes, pos: int) -> tuple[float, int]:
+    try:
+        return _unpack_float(buf, pos)[0], pos + 4
+    except _struct.error:
+        raise DatumError(f"truncated float at offset {pos}") from None
+
+
+def _read_double(buf: bytes, pos: int) -> tuple[float, int]:
+    try:
+        return _unpack_double(buf, pos)[0], pos + 8
+    except _struct.error:
+        raise DatumError(f"truncated double at offset {pos}") from None
+
+
+def _read_bytes(buf: bytes, pos: int) -> tuple[bytes, int]:
+    n, pos = read_long(buf, pos)
+    return _take(buf, pos, n), pos + n
+
+
+def _read_string(buf: bytes, pos: int) -> tuple[str, int]:
+    n, pos = read_long(buf, pos)
+    try:
+        return _take(buf, pos, n).decode("utf-8"), pos + n
+    except UnicodeDecodeError as ex:
+        raise DatumError(f"invalid UTF-8 at offset {pos + ex.start}") from None
 
 
 # ---------------------------------------------------------------------------
@@ -265,19 +337,17 @@ class BinaryCodec:
             if k is Primitive.NULL:
                 return None, pos
             if k is Primitive.BOOLEAN:
-                return buf[pos] == 1, pos + 1
+                return _read_boolean(buf, pos)
             if k in (Primitive.INT, Primitive.LONG):
                 return read_long(buf, pos)
             if k is Primitive.FLOAT:
-                return _struct.unpack_from("<f", buf, pos)[0], pos + 4
+                return _read_float(buf, pos)
             if k is Primitive.DOUBLE:
-                return _struct.unpack_from("<d", buf, pos)[0], pos + 8
+                return _read_double(buf, pos)
             if k is Primitive.BYTES:
-                n, pos = read_long(buf, pos)
-                return _take(buf, pos, n), pos + n
+                return _read_bytes(buf, pos)
             if k is Primitive.STRING:
-                n, pos = read_long(buf, pos)
-                return _take(buf, pos, n).decode("utf-8"), pos + n
+                return _read_string(buf, pos)
         if isinstance(t, AvroEnum):
             i, pos = read_long(buf, pos)
             if not 0 <= i < len(t.symbols):
@@ -307,9 +377,7 @@ class BinaryCodec:
                     _, pos = read_long(buf, pos)
                     n = -n
                 for _ in range(n):
-                    klen, pos = read_long(buf, pos)
-                    key = _take(buf, pos, klen).decode("utf-8")
-                    pos += klen
+                    key, pos = _read_string(buf, pos)
                     out[key], pos = self._dec(t.values, buf, pos)
         if isinstance(t, AvroUnion):
             idx, pos = read_long(buf, pos)
@@ -357,29 +425,17 @@ class BinaryCodec:
             if k is Primitive.NULL:
                 return lambda buf, pos: (None, pos)
             if k is Primitive.BOOLEAN:
-                return lambda buf, pos: (buf[pos] == 1, pos + 1)
+                return _read_boolean
             if k in (Primitive.INT, Primitive.LONG):
                 return read_long
             if k is Primitive.FLOAT:
-                unpack = _struct.unpack_from
-                return lambda buf, pos: (unpack("<f", buf, pos)[0], pos + 4)
+                return _read_float
             if k is Primitive.DOUBLE:
-                unpack = _struct.unpack_from
-                return lambda buf, pos: (unpack("<d", buf, pos)[0], pos + 8)
+                return _read_double
             if k is Primitive.BYTES:
-
-                def dec_bytes(buf, pos):
-                    n, pos = read_long(buf, pos)
-                    return _take(buf, pos, n), pos + n
-
-                return dec_bytes
+                return _read_bytes
             if k is Primitive.STRING:
-
-                def dec_string(buf, pos):
-                    n, pos = read_long(buf, pos)
-                    return _take(buf, pos, n).decode("utf-8"), pos + n
-
-                return dec_string
+                return _read_string
         if isinstance(t, AvroEnum):
             symbols = t.symbols
             n_sym = len(symbols)
@@ -426,9 +482,7 @@ class BinaryCodec:
                         _, pos = read_long(buf, pos)
                         n = -n
                     for _ in range(n):
-                        klen, pos = read_long(buf, pos)
-                        key = _take(buf, pos, klen).decode("utf-8")
-                        pos += klen
+                        key, pos = _read_string(buf, pos)
                         out[key], pos = dec_val(buf, pos)
 
             return dec_map
@@ -894,200 +948,6 @@ def _bytes_to_b64(o: Any) -> str:
     raise TypeError(f"not JSON serializable: {type(o).__name__}")
 
 
-# ---------------------------------------------------------------------------
-# pandas UDFs: Avro-JSON text ⇄ Avro binary
-# ---------------------------------------------------------------------------
-
-# Per-process schema caches (r13 optimization): a pandas UDF body runs once
-# per Arrow batch, so parse_schema + BinaryCodec-compile + fingerprint were
-# paid per batch; these memoize them per (worker process, schema text).
-# Bounded: a process sees the handful of schemas its queries register.
-
-
-@lru_cache(maxsize=256)
-def _cached_schema(schema_json: str) -> ParsedSchema:
-    return parse_schema(schema_json)
-
-
-@lru_cache(maxsize=256)
-def _cached_codec(schema_json: str) -> BinaryCodec:
-    return BinaryCodec(_cached_schema(schema_json))
-
-
-@lru_cache(maxsize=256)
-def _cached_json_view(schema_json: str):
-    ps = _cached_schema(schema_json)
-    return _compile_json_view(ps.root, ps.env)
-
-
-@lru_cache(maxsize=256)
-def _cached_semantic_view(schema_json: str):
-    ps = _cached_schema(schema_json)
-    return _compile_semantic_view(ps.root, ps.env)
-
-
-@lru_cache(maxsize=256)
-def _cached_pydecoder(schema_json: str):
-    """Schema-compiled strict Avro-JSON datum decoder (r14-opt): the
-    pydecode reference semantics, compiled once per (process, schema)."""
-    from ..codec.pydecode import compile_decoder
-
-    ps = _cached_schema(schema_json)
-    return compile_decoder(ps.root, ps.env)
-
-
-def avro_encode_udf(schema_json: str):
-    """Series→Series pandas UDF: strict-decode Avro-JSON text and emit Avro
-    binary.  Schema is closed over (parsed once per executor)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.BinaryType())
-    def _encode(s: pd.Series) -> pd.Series:
-        codec = _cached_codec(schema_json)
-        dec_fn = _cached_pydecoder(schema_json)  # r14-opt: compiled, per-process
-        return s.map(lambda txt: codec.encode(dec_fn(json.loads(txt))))
-
-    return _encode
-
-
-def avro_decode_udf(schema_json: str):
-    """Series→Series pandas UDF: Avro binary → canonical JSON text of the
-    decoded representation."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.StringType())
-    def _decode(s: pd.Series) -> pd.Series:
-        codec = _cached_codec(schema_json)
-        json_view = _cached_json_view(schema_json)
-        return s.map(
-            lambda b: dumps_avro_json(json_view(codec.decode(bytes(b))))
-        )
-
-    return _decode
-
-
-def avro_encode(col: Column | str, schema_json: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return avro_encode_udf(schema_json)(c)
-
-
-def avro_decode(col: Column | str, schema_json: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return avro_decode_udf(schema_json)(c)
-
-
-# ---------------------------------------------------------------------------
-# single-object encoding (Avro spec: 0xC3 0x01 marker + CRC-64-AVRO
-# fingerprint, little-endian + binary body) — the framing schema registries
-# and message buses use to pair a datum with its schema identity
-# ---------------------------------------------------------------------------
-
-SINGLE_OBJECT_MAGIC = b"\xc3\x01"
-
-
-@lru_cache(maxsize=256)
-def _single_object_header(schema_json: str) -> bytes:
-    from ..schema.fingerprint import schema_fingerprint
-
-    return SINGLE_OBJECT_MAGIC + schema_fingerprint(schema_json, "CRC-64-AVRO")
-
-
-def single_object_encode_udf(schema_json: str):
-    """Series→Series pandas UDF: Avro-JSON text → single-object-encoded
-    binary (10-byte header + Avro binary body)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.BinaryType())
-    def _encode(s: pd.Series) -> pd.Series:
-        codec = _cached_codec(schema_json)
-        header = _single_object_header(schema_json)
-        dec_fn = _cached_pydecoder(schema_json)  # r14-opt: compiled, per-process
-        return s.map(lambda txt: header + codec.encode(dec_fn(json.loads(txt))))
-
-    return _encode
-
-
-def single_object_decode_udf(schema_json: str):
-    """Series→Series pandas UDF: single-object binary → canonical JSON text.
-
-    Validates the 2-byte marker and that the embedded fingerprint matches
-    ``schema_json`` (a mismatch means the message was written with a
-    different schema — surfacing it as :class:`DatumError` is the
-    single-schema reader's contract; a registry-backed reader would
-    dispatch on the fingerprint instead)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.StringType())
-    def _decode(s: pd.Series) -> pd.Series:
-        codec = _cached_codec(schema_json)
-        json_view = _cached_json_view(schema_json)
-        header = _single_object_header(schema_json)
-
-        def one(b) -> str:
-            buf = bytes(b)
-            if len(buf) < 10 or buf[:2] != SINGLE_OBJECT_MAGIC:
-                raise DatumError("not a single-object-encoded Avro message")
-            if buf[2:10] != header[2:]:
-                raise DatumError(
-                    f"schema fingerprint mismatch: message {buf[2:10].hex()}, "
-                    f"reader {header[2:].hex()}"
-                )
-            return dumps_avro_json(json_view(codec.decode(buf[10:])))
-
-        return s.map(one)
-
-    return _decode
-
-
-def avro_decode_permissive_udf(schema_json: str):
-    """Series→Series pandas UDF: Avro binary → struct(value json, error).
-
-    The binary-path analogue of the JSON decoder's permissive mode: corrupt
-    wire input (truncated varints, overrun slices, bad union/enum indices —
-    all surfaced as :class:`DatumError` by the codec) lands in the error
-    channel instead of failing the job; trailing garbage after a complete
-    datum is likewise an error."""
-    from pyspark.sql.functions import pandas_udf
-
-    out_t = T.StructType(
-        [
-            T.StructField("value", T.StringType(), True),
-            T.StructField("error", T.StringType(), True),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _decode(s: pd.Series) -> pd.DataFrame:
-        codec = _cached_codec(schema_json)
-        json_view = _cached_json_view(schema_json)
-        values, errors = [], []
-        for b in s:
-            try:
-                values.append(dumps_avro_json(json_view(codec.decode(bytes(b)))))
-                errors.append(None)
-            except DatumError as ex:
-                values.append(None)
-                errors.append(f"DatumError: {ex}")
-        return pd.DataFrame({"value": values, "error": errors})
-
-    return _decode
-
-
-def avro_decode_permissive(col: Column | str, schema_json: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return avro_decode_permissive_udf(schema_json)(c)
-
-
-def single_object_encode(col: Column | str, schema_json: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return single_object_encode_udf(schema_json)(c)
-
-
-def single_object_decode(col: Column | str, schema_json: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return single_object_decode_udf(schema_json)(c)
-
-
 def _lift_semantic(logical, x):
     out = py_carrier_to_value(logical, x)
     # instant-semantics timestamps land as TimestampType (LTZ):
@@ -1153,12 +1013,12 @@ def _nullable_type(dt: T.DataType) -> T.DataType:
     return dt
 
 
-def _typed_frame(rows: list, field_names: list[str], out_t: T.StructType) -> pd.DataFrame:
+def _typed_frame(rows: list, out_t: T.StructType) -> pd.DataFrame:
     """Row dicts → the pandas frame Arrow will accept for ``out_t``.
     Struct-returning pandas UDFs get an EXACT Arrow schema check (no
     ns→us coercion like scalar returns): top-level timestamp columns must
     be datetime64[us] — tz-aware for LTZ, naive for NTZ."""
-    df = pd.DataFrame(rows, columns=field_names)
+    df = pd.DataFrame(rows, columns=out_t.names)
     for f in out_t.fields:
         if isinstance(f.dataType, T.TimestampType):
             df[f.name] = pd.to_datetime(df[f.name], utc=True).astype("datetime64[us, UTC]")
@@ -1167,272 +1027,73 @@ def _typed_frame(rows: list, field_names: list[str], out_t: T.StructType) -> pd.
     return df
 
 
-def single_object_decode_typed_udf(schema_json: str):
-    """Series→DataFrame pandas UDF: single-object binary → the TYPED
-    struct directly (one Arrow hop), skipping the JSON text round-trip of
-    :func:`single_object_decode_udf` + ``decode_json``.
+# ---------------------------------------------------------------------------
+# pandas UDFs: Avro-JSON text ⇄ Avro binary
+# ---------------------------------------------------------------------------
 
-    Same validation contract as the JSON-hop path — framing marker and
-    embedded-fingerprint checks raise :class:`DatumError` — and the body
-    needs no re-validation: binary decode is schema-directed, so a
-    successfully decoded datum IS well-typed (the JSON hop merely
-    re-checked the codec's own output).  Use for the consumption hot
-    path; the JSON hop remains the route when downstream wants the
-    permissive error channel or text for auditing."""
-    from pyspark.sql.functions import pandas_udf
-
-    from ..schema.spark_convert import to_struct_type
-
-    _ps = parse_schema(schema_json)
-    # all-nullable copy: pandas→Arrow batches always carry nullable
-    # fields, and Spark 4 rejects the schema otherwise (nullability here
-    # is metadata — required-field enforcement happened at binary decode)
-    out_t = _nullable_type(to_struct_type(_ps.root, _ps.env))
-    if not isinstance(_ps.root, AvroRecord):
-        raise DatumError("typed decode requires a record root schema")
-    field_names = [f.name for f in _ps.root.fields]
-
-    @pandas_udf(out_t)
-    def _decode(s: pd.Series) -> pd.DataFrame:
-        codec = _cached_codec(schema_json)
-        semantic = _cached_semantic_view(schema_json)
-        header = _single_object_header(schema_json)
-        rows = []
-        for b in s:
-            buf = bytes(b)
-            if len(buf) < 10 or buf[:2] != SINGLE_OBJECT_MAGIC:
-                raise DatumError("not a single-object-encoded Avro message")
-            if buf[2:10] != header[2:]:
-                raise DatumError(
-                    f"schema fingerprint mismatch: message {buf[2:10].hex()}, "
-                    f"reader {header[2:].hex()}"
-                )
-            rows.append(semantic(codec.decode(buf[10:])))
-        return _typed_frame(rows, field_names, out_t)
-
-    return _decode
+# Per-process schema caches (r13 optimization): a pandas UDF body runs once
+# per Arrow batch, so parse_schema + BinaryCodec-compile + fingerprint were
+# paid per batch; these memoize them per (worker process, schema text).
+# Bounded: a process sees the handful of schemas its queries register.
 
 
-def single_object_decode_typed(col: Column | str, schema_json: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return single_object_decode_typed_udf(schema_json)(c)
+@lru_cache(maxsize=256)
+def _cached_schema(schema_json: str) -> ParsedSchema:
+    return parse_schema(schema_json)
 
 
-def single_object_decode_registry_typed_udf(writer_schemas: list[str], reader_schema: str):
-    """Typed variant of :func:`single_object_decode_registry_udf`: dispatch
-    each message to its writer schema by the embedded CRC-64-AVRO
-    fingerprint, resolve writer→reader (codec/evolve.resolve_datum), and
-    emit the reader-shaped TYPED struct straight from the Arrow batch —
-    the registry consumption hot path without the JSON round-trip.
-    Unknown fingerprints raise DatumError, as in the JSON-hop variant."""
-    from pyspark.sql.functions import pandas_udf
-
-    from ..schema.spark_convert import to_struct_type
-
-    _rps = parse_schema(reader_schema)
-    if not isinstance(_rps.root, AvroRecord):
-        raise DatumError("typed decode requires a record root schema")
-    out_t = _nullable_type(to_struct_type(_rps.root, _rps.env))
-    field_names = [f.name for f in _rps.root.fields]
-
-    @pandas_udf(out_t)
-    def _decode(s: pd.Series) -> pd.DataFrame:
-        from ..codec.evolve import resolve_datum
-
-        rps = _cached_schema(reader_schema)
-        semantic = _cached_semantic_view(reader_schema)
-        by_fp = {}
-        for wjson in writer_schemas:
-            by_fp[_single_object_header(wjson)[2:]] = (
-                _cached_schema(wjson),
-                _cached_codec(wjson),
-            )
-        rows = []
-        for b in s:
-            buf = bytes(b)
-            if len(buf) < 10 or buf[:2] != SINGLE_OBJECT_MAGIC:
-                raise DatumError("not a single-object-encoded Avro message")
-            entry = by_fp.get(buf[2:10])
-            if entry is None:
-                raise DatumError(f"unknown schema fingerprint {buf[2:10].hex()}")
-            wps, codec = entry
-            out = resolve_datum(codec.decode(buf[10:]), wps.root, rps.root, rps.env, wps.env)
-            rows.append(semantic(out))
-        return _typed_frame(rows, field_names, out_t)
-
-    return _decode
+@lru_cache(maxsize=256)
+def _cached_codec(schema_json: str) -> BinaryCodec:
+    return BinaryCodec(_cached_schema(schema_json))
 
 
-def single_object_decode_registry_typed(
-    col: Column | str, writer_schemas: list[str], reader_schema: str
-) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return single_object_decode_registry_typed_udf(writer_schemas, reader_schema)(c)
+@lru_cache(maxsize=256)
+def _cached_json_view(schema_json: str):
+    ps = _cached_schema(schema_json)
+    return _compile_json_view(ps.root, ps.env)
 
 
-def confluent_decode_registry_typed_udf(schemas_by_id: dict[int, str], reader_schema: str):
-    """Typed variant of :func:`confluent_decode_registry_udf`: Confluent
-    5-byte framing (0x00 + BE id) dispatched by id, resolved writer→reader,
-    emitted as ``struct(schema_id int, value struct<reader>)`` — the id
-    stays a column for producer-version auditing, the body skips the JSON
-    round-trip."""
-    from pyspark.sql.functions import pandas_udf
-
-    from ..schema.spark_convert import to_struct_type
-
-    _rps = parse_schema(reader_schema)
-    if not isinstance(_rps.root, AvroRecord):
-        raise DatumError("typed decode requires a record root schema")
-    value_t = _nullable_type(to_struct_type(_rps.root, _rps.env))
-    out_t = T.StructType(
-        [
-            T.StructField("schema_id", T.IntegerType(), True),
-            T.StructField("value", value_t, True),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _decode(s: pd.Series) -> pd.DataFrame:
-        from ..codec.evolve import resolve_datum
-
-        rps = _cached_schema(reader_schema)
-        semantic = _cached_semantic_view(reader_schema)
-        by_id = {}
-        for sid, wjson in schemas_by_id.items():
-            by_id[int(sid)] = (_cached_schema(wjson), _cached_codec(wjson))
-        ids, values = [], []
-        for b in s:
-            buf = bytes(b)
-            if len(buf) < 5 or buf[:1] != CONFLUENT_MAGIC:
-                raise DatumError("not a Confluent-framed message (magic byte != 0x00)")
-            sid = _struct.unpack(">I", buf[1:5])[0]
-            entry = by_id.get(sid)
-            if entry is None:
-                raise DatumError(f"schema id {sid} not in registry map")
-            wps, codec = entry
-            out = resolve_datum(codec.decode(buf[5:]), wps.root, rps.root, rps.env, wps.env)
-            ids.append(sid)
-            values.append(semantic(out))
-        return pd.DataFrame(
-            {"schema_id": pd.array(ids, dtype="Int32"), "value": values}
-        )
-
-    return _decode
+@lru_cache(maxsize=256)
+def _cached_semantic_view(schema_json: str):
+    ps = _cached_schema(schema_json)
+    return _compile_semantic_view(ps.root, ps.env)
 
 
-def confluent_decode_registry_typed(
-    col: Column | str, schemas_by_id: dict[int, str], reader_schema: str
-) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return confluent_decode_registry_typed_udf(schemas_by_id, reader_schema)(c)
+@lru_cache(maxsize=256)
+def _cached_pydecoder(schema_json: str):
+    """Schema-compiled strict Avro-JSON datum decoder (r14-opt): the
+    pydecode reference semantics, compiled once per (process, schema)."""
+    from ..codec.pydecode import compile_decoder
 
-
-def single_object_decode_registry_udf(writer_schemas: list[str], reader_schema: str):
-    """Series→Series pandas UDF: single-object binary → reader-shaped JSON,
-    dispatching each message to its writer schema by the embedded
-    CRC-64-AVRO fingerprint — the full schema-registry consumption path
-    (a stream interleaving messages from several schema versions reads as
-    one uniform relation).  Unknown fingerprints raise DatumError."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.StringType())
-    def _decode(s: pd.Series) -> pd.Series:
-        from ..codec.evolve import resolve_datum
-
-        rps = _cached_schema(reader_schema)
-        json_view = _cached_json_view(reader_schema)
-        by_fp = {}
-        for wjson in writer_schemas:
-            by_fp[_single_object_header(wjson)[2:]] = (
-                _cached_schema(wjson),
-                _cached_codec(wjson),
-            )
-
-        def one(b) -> str:
-            buf = bytes(b)
-            if len(buf) < 10 or buf[:2] != SINGLE_OBJECT_MAGIC:
-                raise DatumError("not a single-object-encoded Avro message")
-            entry = by_fp.get(buf[2:10])
-            if entry is None:
-                raise DatumError(f"unknown schema fingerprint {buf[2:10].hex()}")
-            wps, codec = entry
-            v = codec.decode(buf[10:])
-            out = resolve_datum(v, wps.root, rps.root, rps.env, wps.env)
-            return dumps_avro_json(json_view(out))
-
-        return s.map(one)
-
-    return _decode
-
-
-def single_object_decode_registry(
-    col: Column | str, writer_schemas: list[str], reader_schema: str
-) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return single_object_decode_registry_udf(writer_schemas, reader_schema)(c)
-
-
-def single_object_decode_permissive_udf(schema_json: str):
-    """Series→Series pandas UDF: single-object binary → struct(value json,
-    error).  The dead-letter variant of :func:`single_object_decode_udf`:
-    framing defects (bad magic, short header, fingerprint mismatch) and
-    body defects (truncated varints, overruns, bad indices) land in the
-    error channel instead of failing the batch — the PERMISSIVE contract a
-    long-running stream consumer needs (one poisoned message must not kill
-    the query)."""
-    from pyspark.sql.functions import pandas_udf
-
-    out_t = T.StructType(
-        [
-            T.StructField("value", T.StringType(), True),
-            T.StructField("error", T.StringType(), True),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _decode(s: pd.Series) -> pd.DataFrame:
-        codec = _cached_codec(schema_json)
-        json_view = _cached_json_view(schema_json)
-        header = _single_object_header(schema_json)
-        values, errors = [], []
-        for b in s:
-            try:
-                buf = bytes(b)
-                if len(buf) < 10 or buf[:2] != SINGLE_OBJECT_MAGIC:
-                    raise DatumError("not a single-object-encoded Avro message")
-                if buf[2:10] != header[2:]:
-                    raise DatumError(
-                        f"schema fingerprint mismatch: message {buf[2:10].hex()}, "
-                        f"reader {header[2:].hex()}"
-                    )
-                values.append(dumps_avro_json(json_view(codec.decode(buf[10:]))))
-                errors.append(None)
-            except DatumError as ex:
-                values.append(None)
-                errors.append(f"DatumError: {ex}")
-        return pd.DataFrame({"value": values, "error": errors})
-
-    return _decode
-
-
-def single_object_decode_permissive(col: Column | str, schema_json: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return single_object_decode_permissive_udf(schema_json)(c)
+    ps = _cached_schema(schema_json)
+    return compile_decoder(ps.root, ps.env)
 
 
 # ---------------------------------------------------------------------------
+# framings
+#
+# Single-object encoding (Avro spec): 0xC3 0x01 marker + CRC-64-AVRO
+# fingerprint, little-endian, + binary body — the framing schema registries
+# and message buses use to pair a datum with its schema identity.
+#
 # Confluent Schema Registry wire format: magic byte 0x00 + 4-byte BIG-endian
-# schema id + Avro binary body.  This is the framing every Kafka producer
-# using Confluent's serializers emits — distinct from the Avro spec's
-# single-object encoding above (0xC3 0x01 + little-endian CRC-64-AVRO
-# fingerprint).  The reference roadmap names "Schemaregistry support"
-# (/root/reference/README.md:25); format per Confluent's public wire-format
-# documentation.  Ids are registry-assigned integers; the consumer resolves
-# id → writer schema via its subject map (here: a closed-over dict standing
-# in for the registry client's id cache).
+# schema id + Avro binary body — the framing every Kafka producer using
+# Confluent's serializers emits.  The reference roadmap names
+# "Schemaregistry support" (reference README.md:25); format per
+# Confluent's public wire-format documentation.  Ids are registry-assigned
+# integers; the consumer resolves id → writer schema through a static map
+# (standing in for a registry client's id cache) or a registry client.
 # ---------------------------------------------------------------------------
 
+SINGLE_OBJECT_MAGIC = b"\xc3\x01"
 CONFLUENT_MAGIC = b"\x00"
+
+
+@lru_cache(maxsize=256)
+def _single_object_header(schema_json: str) -> bytes:
+    from ..schema.fingerprint import schema_fingerprint
+
+    return SINGLE_OBJECT_MAGIC + schema_fingerprint(schema_json, "CRC-64-AVRO")
 
 
 def confluent_header(schema_id: int) -> bytes:
@@ -1442,94 +1103,56 @@ def confluent_header(schema_id: int) -> bytes:
     return CONFLUENT_MAGIC + _struct.pack(">I", schema_id)
 
 
-def confluent_encode_udf(schema_json: str, schema_id: int):
-    """Series→Series pandas UDF: Avro-JSON text → Confluent-framed binary
-    (5-byte header + Avro binary body), as a registry-registered producer
-    with the given id would emit."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.BinaryType())
-    def _encode(s: pd.Series) -> pd.Series:
-        codec = _cached_codec(schema_json)
-        header = confluent_header(schema_id)
-        dec_fn = _cached_pydecoder(schema_json)  # r14-opt: compiled, per-process
-        return s.map(lambda txt: header + codec.encode(dec_fn(json.loads(txt))))
-
-    return _encode
-
-
-def confluent_decode_registry_udf(schemas_by_id: dict[int, str], reader_schema: str):
-    """Series→Series pandas UDF: Confluent-framed binary →
-    struct(schema_id int, json string) under the reader schema.
-
-    Each message dispatches to its writer schema by the embedded 4-byte id
-    (the id cache a Confluent deserializer keeps after resolving ids against
-    the registry), then resolves writer→reader via the engine's schema
-    evolution (codec/evolve.py) — so a topic interleaving several registered
-    versions reads as one uniform reader-shaped relation, with the writer id
-    surfaced as a column (consumers routinely audit which producers are on
-    which version).  Unknown ids and bad magic raise DatumError — use
-    :func:`confluent_decode_registry_permissive_udf` for the dead-letter
-    variant."""
-    from pyspark.sql.functions import pandas_udf
-
-    out_t = T.StructType(
-        [
-            T.StructField("schema_id", T.IntegerType(), True),
-            T.StructField("json", T.StringType(), True),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _decode(s: pd.Series) -> pd.DataFrame:
-        from ..codec.evolve import resolve_datum
-
-        rps = _cached_schema(reader_schema)
-        json_view = _cached_json_view(reader_schema)
-        by_id = {}
-        for sid, wjson in schemas_by_id.items():
-            by_id[int(sid)] = (_cached_schema(wjson), _cached_codec(wjson))
-
-        ids, jsons = [], []
-        for b in s:
-            sid, txt = _confluent_one(bytes(b), by_id, rps, resolve_datum, json_view)
-            ids.append(sid)
-            jsons.append(txt)
-        return pd.DataFrame({"schema_id": pd.array(ids, dtype="Int32"), "json": jsons})
-
-    return _decode
-
-
-def _confluent_one(buf: bytes, by_id, rps, resolve_datum, json_view=None) -> tuple[int, str]:
-    """Decode one Confluent-framed message; shared by strict + permissive.
-    ``by_id`` is a dict (static id map) or any object with a dict-shaped
-    ``get`` whose miss may raise DatumError itself (the registry-client
-    resolver does, so an id unknown to the *registry* dead-letters with
-    the same contract as an id missing from a static map)."""
+def _confluent_id(buf: bytes) -> int | None:
+    """The schema id of a well-formed Confluent header, else None."""
     if len(buf) < 5 or buf[:1] != CONFLUENT_MAGIC:
-        raise DatumError("not a Confluent-framed message (magic byte != 0x00)")
-    sid = _struct.unpack(">I", buf[1:5])[0]
-    entry = by_id.get(sid)
-    if entry is None:
-        raise DatumError(f"schema id {sid} not in registry map")
-    wps, codec = entry
-    v = codec.decode(buf[5:])
-    out = resolve_datum(v, wps.root, rps.root, rps.env, wps.env)
-    if json_view is None:
-        return sid, dumps_avro_json(as_avro_json(rps.root, out, rps.env))
-    return sid, dumps_avro_json(json_view(out))
+        return None
+    return int.from_bytes(buf[1:5], "big")
+
+
+def _single_object_frame(by_fp, miss: str):
+    """Reader for single-object frames; ``miss`` formats the unknown
+    fingerprint's hex into the error text."""
+
+    def frame(buf):
+        if len(buf) < 10 or buf[:2] != SINGLE_OBJECT_MAGIC:
+            raise DatumError("not a single-object-encoded Avro message")
+        entry = by_fp.get(buf[2:10])
+        if entry is None:
+            raise DatumError(miss.format(buf[2:10].hex()))
+        return None, entry, buf[10:]
+
+    return frame
+
+
+def _confluent_frame(by_id):
+    """Reader for Confluent frames.  ``by_id`` is a dict or any object with
+    a dict-shaped ``get`` whose miss may raise DatumError itself (the
+    registry-client resolver does)."""
+
+    def frame(buf):
+        sid = _confluent_id(buf)
+        if sid is None:
+            raise DatumError("not a Confluent-framed message (magic byte != 0x00)")
+        entry = by_id.get(sid)
+        if entry is None:
+            raise DatumError(f"schema id {sid} not in registry map")
+        return sid, entry, buf[5:]
+
+    return frame
 
 
 class _ClientIdResolver:
-    """id -> (ParsedSchema, BinaryCodec) through a SchemaRegistryClient,
-    memoizing parsed schemas per UDF instance (the client itself memoizes
-    the JSON per process).  Registry id-miss becomes DatumError so the
-    permissive path dead-letters it like any other poisoned frame; network
-    failures stay SchemaRegistryError — those must fail the batch (retry),
-    not silently dead-letter healthy messages."""
+    """id -> writer entry through a SchemaRegistryClient, memoized per
+    Arrow batch (the client itself memoizes the JSON per process).
+    Registry id-miss becomes DatumError so the permissive path
+    dead-letters it like any other poisoned frame; network failures stay
+    SchemaRegistryError — those must fail the batch (retry), not silently
+    dead-letter healthy messages."""
 
-    def __init__(self, client) -> None:
+    def __init__(self, client, entry) -> None:
         self._client = client
+        self._entry = entry
         self._cache: dict[int, tuple] = {}
 
     def get(self, sid: int):
@@ -1541,116 +1164,223 @@ class _ClientIdResolver:
                 wjson = self._client.schema_by_id(sid)
             except SchemaNotFoundError as ex:
                 raise DatumError(f"schema id {sid} not in registry") from ex
-            entry = self._cache[sid] = (_cached_schema(wjson), _cached_codec(wjson))
+            entry = self._cache[sid] = self._entry(wjson)
         return entry
 
 
-def confluent_decode_client_udf(base_url: str, reader_schema: str, permissive: bool = False):
-    """Registry-client-backed variant of the Confluent decode UDFs: writer
-    schemas resolve by id against the Schema Registry REST API
-    (sources/schema_registry.py — LRU id cache, retries) instead of a
-    static id map, which is what a long-lived consumer actually does when
-    a producer rolls a new version mid-stream.  One client per (process,
-    base_url) so the cache amortizes across Arrow batches and partitions.
-    ``permissive``: unknown-id / framing / body defects populate an
-    ``error`` column (dead-letter) instead of failing the batch."""
+def _frame_reader(framing: str, reader_schema: str, writers):
+    """``buf -> (schema id or None, (codec, writer schema), body)`` for one
+    framing (see :func:`_build_decode`).  The writer schema is None when
+    it is the reader schema: that datum needs no resolution."""
+
+    def entry(wjson: str):
+        wps = None if wjson == reader_schema else _cached_schema(wjson)
+        return _cached_codec(wjson), wps
+
+    if framing == "raw":
+        only = entry(reader_schema)
+        return lambda buf: (None, only, buf)
+    if framing == "single":
+        fp = _single_object_header(reader_schema)[2:]
+        miss = "schema fingerprint mismatch: message {}, reader " + fp.hex()
+        return _single_object_frame({fp: entry(reader_schema)}, miss)
+    if framing == "fingerprint":
+        by_fp = {_single_object_header(w)[2:]: entry(w) for w in writers}
+        return _single_object_frame(by_fp, "unknown schema fingerprint {}")
+    if framing == "id":
+        return _confluent_frame({int(sid): entry(w) for sid, w in writers.items()})
+    from ..sources.schema_registry import process_client  # framing == "client"
+
+    return _confluent_frame(_ClientIdResolver(process_client(writers), entry))
+
+
+# ---------------------------------------------------------------------------
+# the two UDF builders every public wrapper calls
+# ---------------------------------------------------------------------------
+
+
+def _build_decode(
+    col: Column | str,
+    framing: str,
+    reader_schema: str,
+    writers=None,
+    *,
+    typed: bool = False,
+    permissive: bool = False,
+) -> Column:
+    """Avro-binary ``col`` → decoded column, through one pandas UDF that
+    puts four choices together here, once per call:
+
+    * ``framing`` — how a message names its writer schema: ``"raw"`` (no
+      header: the reader schema wrote it), ``"single"`` (single-object
+      header whose fingerprint must be the reader's), ``"fingerprint"``
+      (single-object header; writer found by fingerprint among
+      ``writers``, a list of schema JSON), ``"id"`` (Confluent header;
+      writer found in ``writers``, a dict id → schema JSON) or
+      ``"client"`` (Confluent header; writer fetched by id from the
+      Schema Registry at base URL ``writers`` through the per-process
+      client — LRU id cache, retries).
+    * writer → reader resolution (codec/evolve.resolve_datum), run for a
+      writer schema other than the reader's, so a stream interleaving
+      several writer versions reads as one reader-shaped relation.
+    * ``typed`` — emit the reader's typed struct straight from the Arrow
+      batch (binary decode is schema-directed, so a decoded datum needs
+      no re-validation) instead of canonical JSON text.
+    * ``permissive`` — a DatumError from framing, writer lookup or body
+      (bad magic, unknown fingerprint or id, truncation, bad indices,
+      trailing bytes) fills an ``error`` column with ``"DatumError: …"``
+      instead of failing the batch: one poisoned message must not kill a
+      long-running consumer.  Registry network failures still fail it.
+
+    Confluent framings add a ``schema_id`` column, kept on permissive
+    errors whenever the header parsed (for routing poisoned messages by
+    producer).  Output: the bare value when there is neither an id nor an
+    error column, else ``struct(schema_id?, json|value, error?)`` with the
+    value named ``json`` for Confluent JSON text."""
     from pyspark.sql.functions import pandas_udf
 
-    fields = [
-        T.StructField("schema_id", T.IntegerType(), True),
-        T.StructField("json", T.StringType(), True),
-    ]
-    if permissive:
-        fields.append(T.StructField("error", T.StringType(), True))
-    out_t = T.StructType(fields)
-
-    @pandas_udf(out_t)
-    def _decode(s: pd.Series) -> pd.DataFrame:
-        from ..codec.evolve import resolve_datum
-        from ..sources.schema_registry import process_client
+    with_id = framing in ("id", "client")
+    if typed:
+        from ..schema.spark_convert import to_struct_type
 
         rps = _cached_schema(reader_schema)
-        json_view = _cached_json_view(reader_schema)
-        resolver = _ClientIdResolver(process_client(base_url))
-        ids, jsons, errors = [], [], []
+        if not isinstance(rps.root, AvroRecord):
+            raise DatumError("typed decode requires a record root schema")
+        # all-nullable copy: pandas→Arrow batches always carry nullable
+        # fields, and Spark 4 rejects the schema otherwise (nullability here
+        # is metadata — required-field enforcement happened at binary decode)
+        value_t = _nullable_type(to_struct_type(rps.root, rps.env))
+    else:
+        value_t = T.StringType()
+    fields = [("schema_id", T.IntegerType())] if with_id else []
+    fields.append(("json" if with_id and not typed else "value", value_t))
+    if permissive:
+        fields.append(("error", T.StringType()))
+    bare = len(fields) == 1
+    out_t = value_t if bare else T.StructType([T.StructField(n, t, True) for n, t in fields])
+
+    @pandas_udf(out_t)  # either return hint makes a scalar UDF; bare JSON is a Series
+    def _decode(s: pd.Series) -> pd.DataFrame:
+        from ..codec.evolve import resolve_datum
+
+        rps = _cached_schema(reader_schema)
+        frame = _frame_reader(framing, reader_schema, writers)
+        view = (_cached_semantic_view if typed else _cached_json_view)(reader_schema)
+        ids, values, errors = [], [], []
         for b in s:
             buf = bytes(b)
-            sid = None
             try:
-                if len(buf) >= 5 and buf[:1] == CONFLUENT_MAGIC:
-                    sid = _struct.unpack(">I", buf[1:5])[0]
-                sid, txt = _confluent_one(buf, resolver, rps, resolve_datum, json_view)
-                ids.append(sid)
-                jsons.append(txt)
-                errors.append(None)
+                sid, (codec, wps), body = frame(buf)
+                v = codec.decode(body)
+                if wps is not None:
+                    v = resolve_datum(v, wps.root, rps.root, rps.env, wps.env)
+                v = view(v) if typed else dumps_avro_json(view(v))
+                err = None
             except DatumError as ex:
                 if not permissive:
                     raise
-                ids.append(sid)
-                jsons.append(None)
-                errors.append(f"DatumError: {ex}")
-        out = {"schema_id": pd.array(ids, dtype="Int32"), "json": jsons}
+                sid = _confluent_id(buf) if with_id else None
+                v, err = None, f"DatumError: {ex}"
+            ids.append(sid)
+            values.append(v)
+            errors.append(err)
+        if bare:
+            return _typed_frame(values, value_t) if typed else pd.Series(values, dtype=object)
+        data = [pd.array(ids, dtype="Int32")] if with_id else []
+        data.append(values)
         if permissive:
-            out["error"] = errors
-        return pd.DataFrame(out)
+            data.append(errors)
+        return pd.DataFrame(dict(zip(out_t.names, data)))
 
-    return _decode
+    return _decode(F.col(col) if isinstance(col, str) else col)
+
+
+def _build_encode(col: Column | str, schema_json: str, header: bytes = b"") -> Column:
+    """Avro-JSON text ``col`` → ``header`` + Avro binary body, through one
+    pandas UDF: each text is strict-decoded (the compiled pydecode
+    reference) and binary-encoded with the schema's compiled codec."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf(T.BinaryType())
+    def _encode(s: pd.Series) -> pd.Series:
+        encode = _cached_codec(schema_json).encode
+        dec_fn = _cached_pydecoder(schema_json)  # r14-opt: compiled, per-process
+        return s.map(lambda txt: header + encode(dec_fn(json.loads(txt))))
+
+    return _encode(F.col(col) if isinstance(col, str) else col)
+
+
+# ---------------------------------------------------------------------------
+# public wrappers (the table in the module docstring)
+# ---------------------------------------------------------------------------
+
+
+def avro_encode(col: Column | str, schema_json: str) -> Column:
+    return _build_encode(col, schema_json)
+
+
+def avro_decode(col: Column | str, schema_json: str) -> Column:
+    return _build_decode(col, "raw", schema_json)
+
+
+def avro_decode_permissive(col: Column | str, schema_json: str) -> Column:
+    return _build_decode(col, "raw", schema_json, permissive=True)
+
+
+def single_object_encode(col: Column | str, schema_json: str) -> Column:
+    return _build_encode(col, schema_json, _single_object_header(schema_json))
+
+
+def single_object_decode(col: Column | str, schema_json: str) -> Column:
+    return _build_decode(col, "single", schema_json)
+
+
+def single_object_decode_permissive(col: Column | str, schema_json: str) -> Column:
+    return _build_decode(col, "single", schema_json, permissive=True)
+
+
+def single_object_decode_typed(col: Column | str, schema_json: str) -> Column:
+    return _build_decode(col, "single", schema_json, typed=True)
+
+
+def single_object_decode_registry(
+    col: Column | str, writer_schemas: list[str], reader_schema: str
+) -> Column:
+    return _build_decode(col, "fingerprint", reader_schema, writer_schemas)
+
+
+def single_object_decode_registry_typed(
+    col: Column | str, writer_schemas: list[str], reader_schema: str
+) -> Column:
+    return _build_decode(col, "fingerprint", reader_schema, writer_schemas, typed=True)
+
+
+def confluent_encode(col: Column | str, schema_json: str, schema_id: int) -> Column:
+    return _build_encode(col, schema_json, confluent_header(schema_id))
+
+
+def confluent_decode_registry(
+    col: Column | str, schemas_by_id: dict[int, str], reader_schema: str
+) -> Column:
+    return _build_decode(col, "id", reader_schema, schemas_by_id)
+
+
+def confluent_decode_registry_permissive(
+    col: Column | str, schemas_by_id: dict[int, str], reader_schema: str
+) -> Column:
+    return _build_decode(col, "id", reader_schema, schemas_by_id, permissive=True)
+
+
+def confluent_decode_registry_typed(
+    col: Column | str, schemas_by_id: dict[int, str], reader_schema: str
+) -> Column:
+    return _build_decode(col, "id", reader_schema, schemas_by_id, typed=True)
 
 
 def confluent_decode_client(
     col: Column | str, base_url: str, reader_schema: str, permissive: bool = False
 ) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return confluent_decode_client_udf(base_url, reader_schema, permissive)(c)
-
-
-def confluent_decode_registry_permissive_udf(
-    schemas_by_id: dict[int, str], reader_schema: str
-):
-    """Dead-letter variant of :func:`confluent_decode_registry_udf`:
-    struct(schema_id, json, error) — framing/id/body defects populate
-    ``error`` instead of failing the batch (schema_id is still surfaced
-    when the header parsed, for routing poisoned messages by producer)."""
-    from pyspark.sql.functions import pandas_udf
-
-    out_t = T.StructType(
-        [
-            T.StructField("schema_id", T.IntegerType(), True),
-            T.StructField("json", T.StringType(), True),
-            T.StructField("error", T.StringType(), True),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _decode(s: pd.Series) -> pd.DataFrame:
-        from ..codec.evolve import resolve_datum
-
-        rps = _cached_schema(reader_schema)
-        json_view = _cached_json_view(reader_schema)
-        by_id = {}
-        for sid, wjson in schemas_by_id.items():
-            by_id[int(sid)] = (_cached_schema(wjson), _cached_codec(wjson))
-
-        ids, jsons, errors = [], [], []
-        for b in s:
-            buf = bytes(b)
-            sid = None
-            try:
-                if len(buf) >= 5 and buf[:1] == CONFLUENT_MAGIC:
-                    sid = _struct.unpack(">I", buf[1:5])[0]
-                _, txt = _confluent_one(buf, by_id, rps, resolve_datum, json_view)
-                ids.append(sid)
-                jsons.append(txt)
-                errors.append(None)
-            except DatumError as ex:
-                ids.append(sid)
-                jsons.append(None)
-                errors.append(f"DatumError: {ex}")
-        return pd.DataFrame(
-            {"schema_id": pd.array(ids, dtype="Int32"), "json": jsons, "error": errors}
-        )
-
-    return _decode
+    return _build_decode(col, "client", reader_schema, base_url, permissive=permissive)
 
 
 # ---------------------------------------------------------------------------
@@ -1704,7 +1434,7 @@ def avro_decode_typed(
     tmp = "_anglerfish_avro_json"
     return (
         decode_json(
-            df.withColumn(tmp, avro_decode_udf(schema_json)(c)),
+            df.withColumn(tmp, _build_decode(c, "raw", schema_json)),
             tmp,
             schema_json,
             output_col=output_col,
@@ -1747,25 +1477,5 @@ def avro_encode_typed(
 
         ps = parse_schema(schema_json)
         return df.withColumn(output_col, _to_avro(c, to_avsc(ps.root)))
-    return df.withColumn(
-        output_col, avro_encode_udf(schema_json)(F.to_json(c))
-    )
+    return df.withColumn(output_col, _build_encode(F.to_json(c), schema_json))
 
-
-def confluent_encode(col: Column | str, schema_json: str, schema_id: int) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return confluent_encode_udf(schema_json, schema_id)(c)
-
-
-def confluent_decode_registry(
-    col: Column | str, schemas_by_id: dict[int, str], reader_schema: str
-) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return confluent_decode_registry_udf(schemas_by_id, reader_schema)(c)
-
-
-def confluent_decode_registry_permissive(
-    col: Column | str, schemas_by_id: dict[int, str], reader_schema: str
-) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return confluent_decode_registry_permissive_udf(schemas_by_id, reader_schema)(c)

@@ -5,6 +5,7 @@ from __future__ import annotations
 import io
 import json
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -155,6 +156,28 @@ class TestMalformedInput:
         out = io.BytesIO(); write_long(out, 100); out.write(b"abc")
         with pytest.raises(DatumError, match="overruns"):
             codec.decode(out.getvalue())
+
+    def test_truncated_scalars_and_invalid_utf8(self):
+        """Both decode walks report each cut scalar and each invalid UTF-8
+        string or map key as a DatumError naming its offset."""
+        from anglerfish_spark.errors import DatumError
+
+        def one(t):
+            return f'{{"type":"record","name":"x","fields":[{{"name":"f","type":{t}}}]}}'
+
+        cases = [
+            ('"boolean"', b"", "truncated boolean at offset 0"),
+            ('"float"', b"\x00\x00", "truncated float at offset 0"),
+            ('"double"', b"\x00" * 7, "truncated double at offset 0"),
+            ('"string"', b"\x04a\xff", "invalid UTF-8 at offset 2"),
+            ('{"type":"map","values":"long"}', b"\x02\x02\xc3\x00", "invalid UTF-8 at offset 2"),
+        ]
+        for t, buf, msg in cases:
+            codec = BinaryCodec(one(t))
+            for decode in (codec.decode, codec.decode_interpreted):
+                with pytest.raises(DatumError) as info:
+                    decode(buf)
+                assert str(info.value) == msg, (t, decode)
 
 
 class TestSingleObjectEncoding:
@@ -426,6 +449,38 @@ class TestConfluentFraming:
         # header parsed on the truncated-body row → id still surfaced
         by_err = {r["m"]["error"]: r["m"]["schema_id"] for r in out}
         assert any("truncated" in e and sid == 7 for e, sid in by_err.items())
+
+    def test_corrupt_scalars_dead_letter(self, spark):
+        """A body cut inside a double and one with invalid UTF-8 land in
+        ``error`` in both permissive decoders; the batch does not fail."""
+        from anglerfish_spark.functions.avro_binary import (
+            confluent_decode_registry_permissive,
+            single_object_decode_permissive,
+        )
+
+        cut_double = b"\x00\x00\x00"
+        bad_utf8 = bytes.fromhex("000000000000f03f" "02ff" "00")
+        errors = [
+            "DatumError: truncated double at offset 0",
+            "DatumError: invalid UTF-8 at offset 9",
+        ]
+        so = spark.createDataFrame(
+            [(i, _so(_C_READER, b)) for i, b in enumerate([cut_double, bad_utf8])],
+            "i long, m binary",
+        )
+        got = so.select("i", single_object_decode_permissive("m", _C_READER).alias("o"))
+        rows = [r["o"] for r in sorted(got.collect(), key=lambda r: r["i"])]
+        assert [(r["value"], r["error"]) for r in rows] == [(None, e) for e in errors]
+        cf = spark.createDataFrame(
+            [(i, _cf(5, b)) for i, b in enumerate([cut_double, bad_utf8])],
+            "i long, m binary",
+        )
+        got = cf.select(
+            "i", confluent_decode_registry_permissive("m", {5: _C_READER}, _C_READER).alias("o")
+        )
+        rows = [r["o"] for r in sorted(got.collect(), key=lambda r: r["i"])]
+        got_rows = [(r["schema_id"], r["json"], r["error"]) for r in rows]
+        assert got_rows == [(5, None, e) for e in errors]
 
 
 class TestAvroDecodeTyped:
@@ -965,7 +1020,11 @@ class TestCompiledCodecR13Opt:
                     except Exception as ex:  # noqa: BLE001
                         return (type(ex).__name__, str(ex))
 
-                assert run(codec.decode) == run(codec.decode_interpreted), buf.hex()
+                got = run(codec.decode)
+                assert got == run(codec.decode_interpreted), buf.hex()
+                # corrupt input is always a DatumError, never a foreign
+                # struct.error / IndexError / UnicodeDecodeError
+                assert got[0] in ("ok", "DatumError"), (got, buf.hex())
                 cases += 1
         assert cases >= 4000
 
@@ -991,3 +1050,266 @@ class TestCompiledCodecR13Opt:
 
         for v in bad_values:
             assert run(codec.encode, v) == run(codec.encode_interpreted, v), v
+
+
+# ---------------------------------------------------------------------------
+# wrapper contract: every public wire-codec Column wrapper, pinned by output
+# type and by the rows (or the exact error) it gives for fixed frames
+# ---------------------------------------------------------------------------
+
+_C_READER = (
+    '{"type":"record","name":"C","namespace":"contract","fields":['
+    '{"name":"k","type":"double"},{"name":"s","type":"string"},'
+    '{"name":"tag","type":["null","string"],"default":null}]}'
+)
+_C_WRITER = (  # an older version of C: int k, no tag
+    '{"type":"record","name":"C","namespace":"contract","fields":['
+    '{"name":"k","type":"int"},{"name":"s","type":"string"}]}'
+)
+_C_OTHER = (  # registered nowhere
+    '{"type":"record","name":"C","namespace":"contract","fields":['
+    '{"name":"k","type":"string"}]}'
+)
+_C_JSON_1 = '{"k": 1.5, "s": "a", "tag": {"string": "x"}}'
+_C_JSON_2 = '{"k": -2.0, "s": "", "tag": null}'
+_C_BODY_1 = bytes.fromhex("000000000000f83f" "0261" "02" "0278")
+_C_BODY_2 = bytes.fromhex("00000000000000c0" "00" "00")
+_C_BODY_W = bytes.fromhex("06" "0262")  # _C_WRITER {"k": 3, "s": "b"}
+_C_TRUNC_9 = bytes.fromhex("000000000000f03f" "80")  # string length varint cut
+_C_TYPED = "struct<k:double,s:string,tag:string>"
+_C_ROW_1 = {"k": 1.5, "s": "a", "tag": "x"}
+_C_ROW_2 = {"k": -2.0, "s": "", "tag": None}
+_C_ROW_W = {"k": 3.0, "s": "b", "tag": None}
+_C_TXT_W = '{"k": 3.0, "s": "b", "tag": null}'
+
+
+def _so(schema: str, body: bytes) -> bytes:
+    from anglerfish_spark.schema.fingerprint import schema_fingerprint
+
+    return b"\xc3\x01" + schema_fingerprint(schema, "CRC-64-AVRO") + body
+
+
+def _cf(schema_id: int, body: bytes) -> bytes:
+    return b"\x00" + schema_id.to_bytes(4, "big") + body
+
+
+def _fp_hex(schema: str) -> str:
+    from anglerfish_spark.schema.fingerprint import schema_fingerprint
+
+    return schema_fingerprint(schema, "CRC-64-AVRO").hex()
+
+
+_SO_BAD_MAGIC = b"\xde\xad\x00\x01"
+_CF_BAD_MAGIC = b"\x01\x00\x00\x00\x07\x02"
+_NOT_SO = "not a single-object-encoded Avro message"
+_NOT_CF = "not a Confluent-framed message (magic byte != 0x00)"
+
+
+def _wrapper_contracts(ids):
+    """name -> (make(col) -> Column, dataType simpleString, good frames,
+    expected good outputs, then either ("rows", bad frames, expected rows)
+    for permissive wrappers or ("raises", bad frame, error text) for strict
+    ones).  ``ids`` maps "writer"/"reader" to the ids the registry gave."""
+    from anglerfish_spark.functions import avro_binary as ab
+
+    w, r = ids["writer"], ids["reader"]
+    by_id = {w: _C_WRITER, r: _C_READER}
+    j1, j2 = _C_JSON_1, _C_JSON_2  # the decoders print exactly this text
+    fp_other = _fp_hex(_C_OTHER)
+    fp_mismatch = f"schema fingerprint mismatch: message {fp_other}, reader {_fp_hex(_C_READER)}"
+    dl = "DatumError: "
+    cf_json = "struct<schema_id:int,json:string>"
+    cf_json_err = "struct<schema_id:int,json:string,error:string>"
+    val_err = "struct<value:string,error:string>"
+    so_good = [_so(_C_READER, _C_BODY_1), _so(_C_READER, _C_BODY_2)]
+    so_mixed = [_so(_C_READER, _C_BODY_1), _so(_C_WRITER, _C_BODY_W)]
+    cf_mixed = [_cf(r, _C_BODY_1), _cf(w, _C_BODY_W)]
+    raw_good = [_C_BODY_1, _C_BODY_2]
+    enc_in = [_C_JSON_1, _C_JSON_2]
+    enc_bad = (
+        "raises",
+        '{"k": "x", "s": "a"}',
+        "UnexpectedTypeError: $.k: expected JSON double, got 'x'",
+    )
+    return {
+        "avro_decode": (
+            lambda c: ab.avro_decode(c, _C_READER), "string", raw_good, [j1, j2],
+            ("raises", _C_TRUNC_9, dl + "truncated varint at offset 9"),
+        ),
+        "avro_decode_permissive": (
+            lambda c: ab.avro_decode_permissive(c, _C_READER), val_err, raw_good,
+            [{"value": j1, "error": None}, {"value": j2, "error": None}],
+            ("rows", [_C_TRUNC_9, _C_BODY_2 + b"\x00"], [
+                {"value": None, "error": dl + "truncated varint at offset 9"},
+                {"value": None, "error": dl + "trailing bytes after decode: 1"},
+            ]),
+        ),
+        "single_object_decode": (
+            lambda c: ab.single_object_decode(c, _C_READER), "string", so_good, [j1, j2],
+            ("raises", _so(_C_OTHER, _C_BODY_1), dl + fp_mismatch),
+        ),
+        "single_object_decode_permissive": (
+            lambda c: ab.single_object_decode_permissive(c, _C_READER), val_err, so_good,
+            [{"value": j1, "error": None}, {"value": j2, "error": None}],
+            ("rows", [_SO_BAD_MAGIC, _so(_C_READER, _C_TRUNC_9), _so(_C_OTHER, _C_BODY_1)], [
+                {"value": None, "error": dl + _NOT_SO},
+                {"value": None, "error": dl + "truncated varint at offset 9"},
+                {"value": None, "error": dl + fp_mismatch},
+            ]),
+        ),
+        "single_object_decode_typed": (
+            lambda c: ab.single_object_decode_typed(c, _C_READER), _C_TYPED, so_good,
+            [_C_ROW_1, _C_ROW_2],
+            ("raises", _SO_BAD_MAGIC, dl + _NOT_SO),
+        ),
+        "single_object_decode_registry": (
+            lambda c: ab.single_object_decode_registry(c, [_C_WRITER, _C_READER], _C_READER),
+            "string", so_mixed, [j1, _C_TXT_W],
+            ("raises", _so(_C_OTHER, _C_BODY_1), dl + "unknown schema fingerprint " + fp_other),
+        ),
+        "single_object_decode_registry_typed": (
+            lambda c: ab.single_object_decode_registry_typed(
+                c, [_C_WRITER, _C_READER], _C_READER
+            ),
+            _C_TYPED, so_mixed, [_C_ROW_1, _C_ROW_W],
+            ("raises", _so(_C_WRITER, b"\x80"), dl + "truncated varint at offset 1"),
+        ),
+        "confluent_decode_registry": (
+            lambda c: ab.confluent_decode_registry(c, by_id, _C_READER), cf_json, cf_mixed,
+            [{"schema_id": r, "json": j1}, {"schema_id": w, "json": _C_TXT_W}],
+            ("raises", _cf(99, _C_BODY_1), dl + "schema id 99 not in registry map"),
+        ),
+        "confluent_decode_registry_permissive": (
+            lambda c: ab.confluent_decode_registry_permissive(c, by_id, _C_READER),
+            cf_json_err, cf_mixed,
+            [{"schema_id": r, "json": j1, "error": None},
+             {"schema_id": w, "json": _C_TXT_W, "error": None}],
+            ("rows", [_CF_BAD_MAGIC, _cf(w, b"\x80"), _cf(99, _C_BODY_1)], [
+                {"schema_id": None, "json": None, "error": dl + _NOT_CF},
+                {"schema_id": w, "json": None, "error": dl + "truncated varint at offset 1"},
+                {"schema_id": 99, "json": None, "error": dl + "schema id 99 not in registry map"},
+            ]),
+        ),
+        "confluent_decode_registry_typed": (
+            lambda c: ab.confluent_decode_registry_typed(c, by_id, _C_READER),
+            f"struct<schema_id:int,value:{_C_TYPED}>", cf_mixed,
+            [{"schema_id": r, "value": _C_ROW_1}, {"schema_id": w, "value": _C_ROW_W}],
+            ("raises", _CF_BAD_MAGIC, dl + _NOT_CF),
+        ),
+        "confluent_decode_client": (
+            lambda c: ab.confluent_decode_client(c, ids["url"], _C_READER), cf_json, cf_mixed,
+            [{"schema_id": r, "json": j1}, {"schema_id": w, "json": _C_TXT_W}],
+            ("raises", _cf(99, _C_BODY_1), dl + "schema id 99 not in registry"),
+        ),
+        "confluent_decode_client_permissive": (
+            lambda c: ab.confluent_decode_client(c, ids["url"], _C_READER, permissive=True),
+            cf_json_err, cf_mixed,
+            [{"schema_id": r, "json": j1, "error": None},
+             {"schema_id": w, "json": _C_TXT_W, "error": None}],
+            ("rows", [_CF_BAD_MAGIC, _cf(w, b"\x80"), _cf(99, _C_BODY_1)], [
+                {"schema_id": None, "json": None, "error": dl + _NOT_CF},
+                {"schema_id": w, "json": None, "error": dl + "truncated varint at offset 1"},
+                {"schema_id": 99, "json": None, "error": dl + "schema id 99 not in registry"},
+            ]),
+        ),
+        "avro_encode": (
+            lambda c: ab.avro_encode(c, _C_READER), "binary", enc_in,
+            [_C_BODY_1, _C_BODY_2], enc_bad,
+        ),
+        "single_object_encode": (
+            lambda c: ab.single_object_encode(c, _C_READER), "binary", enc_in,
+            [_so(_C_READER, _C_BODY_1), _so(_C_READER, _C_BODY_2)], enc_bad,
+        ),
+        "confluent_encode": (
+            lambda c: ab.confluent_encode(c, _C_READER, 12), "binary", enc_in,
+            [_cf(12, _C_BODY_1), _cf(12, _C_BODY_2)], enc_bad,
+        ),
+        "confluent_encode_id_range": (
+            lambda c: ab.confluent_encode(c, _C_READER, 1 << 32), "binary", [], [],
+            # raised on the driver or in the worker: only the text is pinned
+            ("raises", _C_JSON_1, f"schema id {1 << 32} out of uint32 range"),
+        ),
+    }
+
+
+_WRAPPER_NAMES = sorted(_wrapper_contracts({"writer": 1, "reader": 2, "url": ""}))
+
+
+class TestWrapperContract:
+    """Each public wire-codec wrapper keeps its output dataType (field
+    names, types and order), its permissive rows and its strict error
+    text.  Every corrupt frame here is one the codec reports as a
+    DatumError.  The DataFrame-level typed wrappers are pinned on their
+    connector-less fallback branch."""
+
+    @staticmethod
+    def _plain(v):
+        from pyspark.sql import Row
+
+        if isinstance(v, Row):
+            return {k: TestWrapperContract._plain(x) for k, x in v.asDict().items()}
+        if isinstance(v, bytearray):
+            return bytes(v)
+        return v
+
+    def _run(self, spark, make, frames):
+        from pyspark.sql import types as T
+
+        in_t = T.StringType() if frames and isinstance(frames[0], str) else T.BinaryType()
+        df = spark.createDataFrame(
+            list(enumerate(frames)),
+            T.StructType([T.StructField("i", T.LongType()), T.StructField("m", in_t)]),
+        )
+        out = df.select("i", make("m").alias("o"))
+        rows = [self._plain(r["o"]) for r in sorted(out.collect(), key=lambda r: r["i"])]
+        return out.schema["o"].dataType.simpleString(), rows
+
+    def _check(self, spark, ids, name):
+        import re
+
+        make, dtype, good, want, (kind, bad, expect) = _wrapper_contracts(ids)[name]
+        if good:
+            got_t, rows = self._run(spark, make, good)
+            assert got_t == dtype
+            assert rows == want
+        if kind == "rows":
+            assert self._run(spark, make, bad)[1] == expect
+        else:
+            with pytest.raises(Exception) as info:
+                self._run(spark, make, [bad])
+            assert re.search(re.escape(expect) + r"(\n|$)", str(info.value)), str(info.value)
+
+    @pytest.mark.parametrize("name", _WRAPPER_NAMES)
+    def test_wrapper_contract(self, spark, name):
+        from tests.fake_schema_registry import fake_registry
+
+        with fake_registry() as (url, state):
+            ids = {
+                "writer": state.register("contract-value", _C_WRITER),
+                "reader": state.register("contract-value", _C_READER),
+                "url": url,
+            }
+            self._check(spark, ids, name)
+
+    def test_typed_dataframe_wrappers(self, spark):
+        """avro_encode_typed / avro_decode_typed on the fallback branch: the
+        added column's type and values, and the strict decode error."""
+        import pytest
+
+        from anglerfish_spark.functions.avro_binary import avro_decode_typed, avro_encode_typed
+        from anglerfish_spark.sources.registry import avro_available
+
+        if avro_available(spark):
+            pytest.skip("connector present: fallback branch not selected here")
+        df = spark.createDataFrame([((3, "b"),)], "v struct<k: int, s: string>")
+        enc = avro_encode_typed(df, "v", _C_WRITER)
+        assert enc.schema["encoded"].dataType.simpleString() == "binary"
+        assert bytes(enc.first()["encoded"]) == _C_BODY_W
+        raw = spark.createDataFrame([(_C_BODY_1,), (_C_BODY_2,)], "m binary")
+        dec = avro_decode_typed(raw, "m", _C_READER)
+        assert dec.schema["decoded"].dataType.simpleString() == _C_TYPED
+        got = sorted((self._plain(r["decoded"]) for r in dec.collect()), key=lambda d: d["k"])
+        assert got == [_C_ROW_2, _C_ROW_1]
+        bad = spark.createDataFrame([(_C_TRUNC_9,)], "m binary")
+        with pytest.raises(Exception, match=r"DatumError: truncated varint at offset 9\n"):
+            avro_decode_typed(bad, "m", _C_READER).collect()

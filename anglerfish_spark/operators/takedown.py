@@ -56,9 +56,10 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..session import prepare
-from ..sources.manifest_table import _MANIFEST_DIR, delete_keys, snapshot, upsert
+from ..sources.manifest_table import delete_keys, snapshot, upsert
 from ..sources.read_path import table_changes
 from ..sources.registry import load_table, read_parquet
+from ..sources.standin import materialize_once
 from .dedup import _FP_SQL, _PAIRS_CTE, dedup_index_tables, lsh_bands
 from .text import (
     TOKENS_SQL,
@@ -101,33 +102,28 @@ def _stable_tag(prefix: str, *parts: str) -> str:
     return f"{prefix}{h}"
 
 
-_TDN_ASSETS: dict[str, tuple[str, str]] = {}
-
-
 def _takedown_assets(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """``(corpus_table, invidx_name)`` built once per process per
     sf_dir, with the takedown ALREADY APPLIED (the steady state the
-    query probes): v1 ingests the indexed corpus + builds the persisted
-    inverted index from the v1 snapshot; v2 is the ``delete_keys``
-    takedown commit; maintenance then consumes the v1→v2 change feed's
-    delete images — asserting the feed took the 'logged' path, i.e. the
-    maintenance read O(deleted rows), never a snapshot diff."""
-    cached = _TDN_ASSETS.get(sf_dir)
+    query probes): v1 ingests the indexed corpus; v2 is the
+    ``delete_keys`` takedown commit; the persisted inverted index is
+    built from the v1 snapshot (merge-on-read: v2 left v1's files as
+    they are); maintenance then consumes the v1→v2 change feed's delete
+    images — asserting the feed took the 'logged' path, i.e. the
+    maintenance read O(deleted rows), never a snapshot diff.  The
+    catalog side rebuilds on its own if the catalog loses it."""
     name = f"ang_invidx_tdn_{abs(hash(sf_dir)) % 10**8}"
-    if (
-        cached
-        and os.path.isdir(os.path.join(cached[0], _MANIFEST_DIR))
-        and spark.catalog.tableExists(invidx_tombstone_table(name))
-    ):
-        return cached
-    t = tempfile.mkdtemp(prefix="anglerfish_takedown_")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    idx_docs = docs.where(F.pmod(F.col("doc_id"), F.lit(10)) != 0)
-    upsert(spark, t, idx_docs, ["doc_id"], txn_id="tdn-v1")
+
+    def build(t: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        idx_docs = docs.where(F.pmod(F.col("doc_id"), F.lit(10)) != 0)
+        upsert(spark, t, idx_docs, ["doc_id"], txn_id="tdn-v1")
+        doomed = idx_docs.where(F.col("doc_id") % 7 == 0).select("doc_id")
+        delete_keys(spark, t, "doc_id", doomed, txn_id="tdn-v2")
+
+    t = materialize_once("takedown", sf_dir, build)
     if not spark.catalog.tableExists(name):
         build_persisted_index(spark, snapshot(spark, t, 1), name)
-    doomed = idx_docs.where(F.col("doc_id") % 7 == 0).select("doc_id")
-    delete_keys(spark, t, "doc_id", doomed, txn_id="tdn-v2")
     if not spark.catalog.tableExists(invidx_tombstone_table(name)):
         feed, mode = table_changes(spark, t, 1, 2, net=True)
         assert mode == "logged", mode  # maintenance must be O(deleted rows)
@@ -135,11 +131,7 @@ def _takedown_assets(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             "doc_id", "text"
         )
         inverted_index_takedown(spark, name, deleted)
-    _TDN_ASSETS[sf_dir] = (t, name)
     return t, name
-
-
-_ANN_TDN_ASSETS: dict[str, tuple[str, str]] = {}
 
 
 def _ann_takedown_assets(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -151,25 +143,20 @@ def _ann_takedown_assets(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     the identical CDC composition as the text-index takedown, applied to
     the third persisted index family (the IVF cell index)."""
     name = f"ang_ivf_ts_{abs(hash(sf_dir)) % 10**8}"
-    cached = _ANN_TDN_ASSETS.get(sf_dir)
-    if (
-        cached
-        and os.path.isdir(os.path.join(cached[0], _MANIFEST_DIR))
-        and spark.catalog.tableExists(name)
-    ):
-        return cached
-    t = tempfile.mkdtemp(prefix="anglerfish_ann_takedown_")
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    upsert(spark, t, e, ["vec_id"], txn_id="atdn-v1")
-    doomed = e.where(F.col("vec_id") % 9 == 0).select("vec_id")
-    delete_keys(spark, t, "vec_id", doomed, txn_id="atdn-v2")
+
+    def build(t: str) -> None:
+        e = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
+        upsert(spark, t, e, ["vec_id"], txn_id="atdn-v1")
+        doomed = e.where(F.col("vec_id") % 9 == 0).select("vec_id")
+        delete_keys(spark, t, "vec_id", doomed, txn_id="atdn-v2")
+
+    t = materialize_once("ann_takedown", sf_dir, build)
     if not spark.catalog.tableExists(name):
         feed, mode = table_changes(spark, t, 1, 2, net=True)
         assert mode == "logged", mode  # maintenance reads O(deleted rows)
         feed.where(F.col("_change_type") == "delete").select(
             "vec_id"
         ).write.mode("append").saveAsTable(name)
-    _ANN_TDN_ASSETS[sf_dir] = (t, name)
     return t, name
 
 

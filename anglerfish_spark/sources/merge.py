@@ -65,6 +65,7 @@ from .manifest_table import (
     snapshot,
     stage_files,
 )
+from .standin import materialize_once
 
 
 #: mode='auto' switches a merge to merge-on-read when the touched-file
@@ -380,46 +381,37 @@ def merge_into(
     )
 
 
-_DEMO_TABLES: dict[str, str] = {}
-
-
 def _merge_demo_table(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per process per sf_dir) the MERGE demo table: v1 loads
     the %3==0 orders; v2 is a three-clause merge whose source is the
     %4==0 orders at price+500 — matched urgent rows deleted, other
     matched rows re-priced from the source, unmatched source rows
     inserted."""
-    import os as _os
-    import tempfile
-
-    from .manifest_table import _MANIFEST_DIR, upsert
+    from .manifest_table import upsert
     from .registry import load_table
 
-    t = _DEMO_TABLES.get(sf_dir)
-    if t and _os.path.isdir(_os.path.join(t, _MANIFEST_DIR)):
-        return t
-    t = tempfile.mkdtemp(prefix="anglerfish_merge_")
-    orders = load_table(spark, sf_dir, "orders")
-    cols = ["o_orderkey", "o_totalprice", "o_orderpriority"]
-    base = orders.where(F.col("o_orderkey") % 3 == 0).select(*cols)
-    upsert(spark, t, base, ["o_orderkey"], txn_id="merge-v1")
-    src = orders.where(F.col("o_orderkey") % 4 == 0).select(
-        "o_orderkey",
-        (F.col("o_totalprice") + F.lit(500.0)).alias("o_totalprice"),
-        "o_orderpriority",
-    )
-    merge_into(
-        spark,
-        t,
-        src,
-        ["o_orderkey"],
-        when_matched_update={"o_totalprice": "s.o_totalprice"},
-        when_matched_delete="s.o_orderpriority = '1-URGENT'",
-        insert_not_matched=True,
-        txn_id="merge-v2",
-    )
-    _DEMO_TABLES[sf_dir] = t
-    return t
+    def build(t: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        cols = ["o_orderkey", "o_totalprice", "o_orderpriority"]
+        base = orders.where(F.col("o_orderkey") % 3 == 0).select(*cols)
+        upsert(spark, t, base, ["o_orderkey"], txn_id="merge-v1")
+        src = orders.where(F.col("o_orderkey") % 4 == 0).select(
+            "o_orderkey",
+            (F.col("o_totalprice") + F.lit(500.0)).alias("o_totalprice"),
+            "o_orderpriority",
+        )
+        merge_into(
+            spark,
+            t,
+            src,
+            ["o_orderkey"],
+            when_matched_update={"o_totalprice": "s.o_totalprice"},
+            when_matched_delete="s.o_orderpriority = '1-URGENT'",
+            insert_not_matched=True,
+            txn_id="merge-v2",
+        )
+
+    return materialize_once("merge", sf_dir, build)
 
 
 _DSUM = "CAST(CAST(SUM(CAST(p AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)"
@@ -473,45 +465,36 @@ def q_table_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MOR_DEMO_TABLES: dict[str, str] = {}
-
-
 def _merge_mor_demo_table(spark: SparkSession, sf_dir: str) -> str:
     """The same three-clause merge history as :func:`_merge_demo_table`
     but applied MERGE-ON-READ: v2 rewrites no data file — matched rows
     mask via positional deletes, new images append."""
-    import os as _os
-    import tempfile
-
-    from .manifest_table import _MANIFEST_DIR, upsert
+    from .manifest_table import upsert
     from .registry import load_table
 
-    t = _MOR_DEMO_TABLES.get(sf_dir)
-    if t and _os.path.isdir(_os.path.join(t, _MANIFEST_DIR)):
-        return t
-    t = tempfile.mkdtemp(prefix="anglerfish_merge_mor_")
-    orders = load_table(spark, sf_dir, "orders")
-    cols = ["o_orderkey", "o_totalprice", "o_orderpriority"]
-    base = orders.where(F.col("o_orderkey") % 3 == 0).select(*cols)
-    upsert(spark, t, base, ["o_orderkey"], txn_id="mor-v1")
-    src = orders.where(F.col("o_orderkey") % 4 == 0).select(
-        "o_orderkey",
-        (F.col("o_totalprice") + F.lit(500.0)).alias("o_totalprice"),
-        "o_orderpriority",
-    )
-    merge_into(
-        spark,
-        t,
-        src,
-        ["o_orderkey"],
-        when_matched_update={"o_totalprice": "s.o_totalprice"},
-        when_matched_delete="s.o_orderpriority = '1-URGENT'",
-        insert_not_matched=True,
-        txn_id="mor-v2",
-        mode="mor",
-    )
-    _MOR_DEMO_TABLES[sf_dir] = t
-    return t
+    def build(t: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        cols = ["o_orderkey", "o_totalprice", "o_orderpriority"]
+        base = orders.where(F.col("o_orderkey") % 3 == 0).select(*cols)
+        upsert(spark, t, base, ["o_orderkey"], txn_id="mor-v1")
+        src = orders.where(F.col("o_orderkey") % 4 == 0).select(
+            "o_orderkey",
+            (F.col("o_totalprice") + F.lit(500.0)).alias("o_totalprice"),
+            "o_orderpriority",
+        )
+        merge_into(
+            spark,
+            t,
+            src,
+            ["o_orderkey"],
+            when_matched_update={"o_totalprice": "s.o_totalprice"},
+            when_matched_delete="s.o_orderpriority = '1-URGENT'",
+            insert_not_matched=True,
+            txn_id="mor-v2",
+            mode="mor",
+        )
+
+    return materialize_once("merge_mor", sf_dir, build)
 
 
 @query(
@@ -564,9 +547,6 @@ def q_table_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
 # half of the auto-routing story — SCALE.md #44/#46)
 # ---------------------------------------------------------------------------
 
-_CLUSTER_DEMO_TABLES: dict[str, str] = {}
-
-
 def _clustered_demo_table(spark: SparkSession, sf_dir: str) -> str:
     """Four-version lifecycle showing the write-side value of
     clustering (once per process per sf_dir):
@@ -588,45 +568,39 @@ def _clustered_demo_table(spark: SparkSession, sf_dir: str) -> str:
     Tests pin the routing (v2 leaves positional deletes, v4 does not)
     and the v4 touch fraction; the registered query checks the final
     contents against orders arithmetic."""
-    import os as _os
-    import tempfile
-
-    from .manifest_table import _MANIFEST_DIR, upsert
+    from .manifest_table import upsert
     from .registry import load_table
     from .skipping import zorder_compact
 
-    t = _CLUSTER_DEMO_TABLES.get(sf_dir)
-    if t and _os.path.isdir(_os.path.join(t, _MANIFEST_DIR)):
-        return t
-    t = tempfile.mkdtemp(prefix="anglerfish_clustered_")
-    orders = load_table(spark, sf_dir, "orders")
-    cols = ["o_orderkey", "o_totalprice", "o_orderpriority"]
-    base = orders.where(F.col("o_orderkey") % 2 == 0).select(*cols)
-    thr = base.agg(F.max("o_orderkey")).first()[0] // 10
-    upsert(spark, t, base.repartition(8, "o_orderkey"), ["o_orderkey"], txn_id="cl-v1")
+    def build(t: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        cols = ["o_orderkey", "o_totalprice", "o_orderpriority"]
+        base = orders.where(F.col("o_orderkey") % 2 == 0).select(*cols)
+        thr = base.agg(F.max("o_orderkey")).first()[0] // 10
+        upsert(spark, t, base.repartition(8, "o_orderkey"), ["o_orderkey"], txn_id="cl-v1")
 
-    def decile_source(lo: int, hi: int, bump: float) -> DataFrame:
-        return base.where(
-            (F.col("o_orderkey") > lo) & (F.col("o_orderkey") <= hi)
-        ).select(
-            "o_orderkey",
-            (F.col("o_totalprice") + F.lit(bump)).alias("o_totalprice"),
-            "o_orderpriority",
+        def decile_source(lo: int, hi: int, bump: float) -> DataFrame:
+            return base.where(
+                (F.col("o_orderkey") > lo) & (F.col("o_orderkey") <= hi)
+            ).select(
+                "o_orderkey",
+                (F.col("o_totalprice") + F.lit(bump)).alias("o_totalprice"),
+                "o_orderpriority",
+            )
+
+        merge_into(
+            spark, t, decile_source(-1, thr, 100.0), ["o_orderkey"],  # (-1, thr]: key 0 is even and real
+            when_matched_update={"o_totalprice": "s.o_totalprice"},
+            insert_not_matched=False, txn_id="cl-v2", mode="auto",
+        )
+        zorder_compact(spark, t, ["o_orderkey"], n_files=8)
+        merge_into(
+            spark, t, decile_source(thr, 2 * thr, 200.0), ["o_orderkey"],
+            when_matched_update={"o_totalprice": "s.o_totalprice"},
+            insert_not_matched=False, txn_id="cl-v4", mode="auto",
         )
 
-    merge_into(
-        spark, t, decile_source(-1, thr, 100.0), ["o_orderkey"],  # (-1, thr]: key 0 is even and real
-        when_matched_update={"o_totalprice": "s.o_totalprice"},
-        insert_not_matched=False, txn_id="cl-v2", mode="auto",
-    )
-    zorder_compact(spark, t, ["o_orderkey"], n_files=8)
-    merge_into(
-        spark, t, decile_source(thr, 2 * thr, 200.0), ["o_orderkey"],
-        when_matched_update={"o_totalprice": "s.o_totalprice"},
-        insert_not_matched=False, txn_id="cl-v4", mode="auto",
-    )
-    _CLUSTER_DEMO_TABLES[sf_dir] = t
-    return t
+    return materialize_once("clustered", sf_dir, build)
 
 
 @query(

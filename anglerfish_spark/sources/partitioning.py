@@ -55,6 +55,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..errors import AnglerfishError
+from .standin import materialize_once
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
@@ -414,8 +415,6 @@ def append_partitioned(
 # registered query: hidden-partition pruning under the driver's oracle gate
 # ---------------------------------------------------------------------------
 
-_PART_TABLES: dict[str, str] = {}
-
 #: the bucketed point-lookup key the demo probes (any existing key works;
 #: 96 is divisible by 3 so the %3==0 load always contains it)
 _PART_PROBE_KEY = 96
@@ -426,39 +425,34 @@ def _partitioned_table(spark: SparkSession, sf_dir: str) -> str:
     ``identity(o_orderpriority) × bucket(4, o_orderkey)``: one commit of
     the %3==0 orders staged through the hive-layout writer with per-file
     partition tuples recorded in the manifest."""
-    import tempfile
-
-    from .manifest_table import _MANIFEST_DIR, commit
+    from .manifest_table import commit
     from .registry import load_table
 
-    t = _PART_TABLES.get(sf_dir)
-    if t and os.path.isdir(os.path.join(t, _MANIFEST_DIR)):
-        return t
-    t = tempfile.mkdtemp(prefix="anglerfish_part_")
-    orders = load_table(spark, sf_dir, "orders")
-    base = orders.where(F.col("o_orderkey") % 3 == 0).select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
-    files, parts, spec = stage_files_partitioned(
-        spark,
-        base,
-        t,
-        [
-            {"transform": "identity", "col": "o_orderpriority"},
-            {"transform": "bucket", "col": "o_orderkey", "n": 4},
-        ],
-    )
-    commit(
-        t,
-        files,
-        expected_version=0,
-        txn_id="part-v1",
-        partition_spec=spec,
-        partitions=parts,
-        changes={"inserted": [{"files": files, "schema": None}], "deleted": []},
-    )
-    _PART_TABLES[sf_dir] = t
-    return t
+    def build(t: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        base = orders.where(F.col("o_orderkey") % 3 == 0).select(
+            "o_orderkey", "o_totalprice", "o_orderpriority"
+        )
+        files, parts, spec = stage_files_partitioned(
+            spark,
+            base,
+            t,
+            [
+                {"transform": "identity", "col": "o_orderpriority"},
+                {"transform": "bucket", "col": "o_orderkey", "n": 4},
+            ],
+        )
+        commit(
+            t,
+            files,
+            expected_version=0,
+            txn_id="part-v1",
+            partition_spec=spec,
+            partitions=parts,
+            changes={"inserted": [{"files": files, "schema": None}], "deleted": []},
+        )
+
+    return materialize_once("part", sf_dir, build)
 
 
 def read_partitioned_report(
@@ -539,9 +533,6 @@ def q_table_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EVOSPEC_TABLES: dict[str, str] = {}
-
-
 def _evospec_table(spark: SparkSession, sf_dir: str) -> str:
     """Partition-lifecycle demo (once per process per sf_dir): v1 loads
     the %3==0 orders under ``truncate(1000, o_orderkey)``; v2
@@ -549,44 +540,39 @@ def _evospec_table(spark: SparkSession, sf_dir: str) -> str:
     evolves the spec to ``bucket(4, o_orderkey)`` (metadata only); v4
     upserts the %5==0 subset of those rows at price+250 (stamped under
     the NEW spec); v5 compacts, restamping everything."""
-    import tempfile
-
-    from .manifest_table import _MANIFEST_DIR, commit, compact_table, upsert
+    from .manifest_table import commit, compact_table, upsert
     from .registry import load_table
 
-    t = _EVOSPEC_TABLES.get(sf_dir)
-    if t and os.path.isdir(os.path.join(t, _MANIFEST_DIR)):
-        return t
-    t = tempfile.mkdtemp(prefix="anglerfish_evospec_")
-    orders = load_table(spark, sf_dir, "orders")
-    cols = ["o_orderkey", "o_totalprice", "o_orderpriority"]
-    base = orders.where(F.col("o_orderkey") % 3 == 0).select(*cols)
-    files, parts, spec = stage_files_partitioned(
-        spark, base, t, [{"transform": "truncate", "col": "o_orderkey", "w": 1000}]
-    )
-    commit(
-        t, files, expected_version=0, txn_id="evo-v1",
-        partition_spec=spec, partitions=parts,
-        changes={"inserted": [{"files": files, "schema": None}], "deleted": []},
-    )
-    append_partitioned(
-        spark, t,
-        orders.where(F.col("o_orderkey") % 3 == 1).select(*cols),
-        txn_id="evo-v2",
-    )
-    evolve_partition_spec(spark, t, [{"transform": "bucket", "col": "o_orderkey", "n": 4}])
-    upd = (
-        orders.where((F.col("o_orderkey") % 3 < 2) & (F.col("o_orderkey") % 5 == 0))
-        .select(
-            "o_orderkey",
-            (F.col("o_totalprice") + F.lit(250.0)).alias("o_totalprice"),
-            "o_orderpriority",
+    def build(t: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        cols = ["o_orderkey", "o_totalprice", "o_orderpriority"]
+        base = orders.where(F.col("o_orderkey") % 3 == 0).select(*cols)
+        files, parts, spec = stage_files_partitioned(
+            spark, base, t, [{"transform": "truncate", "col": "o_orderkey", "w": 1000}]
         )
-    )
-    upsert(spark, t, upd, ["o_orderkey"], txn_id="evo-v4")
-    compact_table(spark, t)
-    _EVOSPEC_TABLES[sf_dir] = t
-    return t
+        commit(
+            t, files, expected_version=0, txn_id="evo-v1",
+            partition_spec=spec, partitions=parts,
+            changes={"inserted": [{"files": files, "schema": None}], "deleted": []},
+        )
+        append_partitioned(
+            spark, t,
+            orders.where(F.col("o_orderkey") % 3 == 1).select(*cols),
+            txn_id="evo-v2",
+        )
+        evolve_partition_spec(spark, t, [{"transform": "bucket", "col": "o_orderkey", "n": 4}])
+        upd = (
+            orders.where((F.col("o_orderkey") % 3 < 2) & (F.col("o_orderkey") % 5 == 0))
+            .select(
+                "o_orderkey",
+                (F.col("o_totalprice") + F.lit(250.0)).alias("o_totalprice"),
+                "o_orderpriority",
+            )
+        )
+        upsert(spark, t, upd, ["o_orderkey"], txn_id="evo-v4")
+        compact_table(spark, t)
+
+    return materialize_once("evospec", sf_dir, build)
 
 
 @query(

@@ -57,6 +57,7 @@ from .manifest_table import (
     read_manifest_light,
 )
 from .skipping import _file_may_match
+from .standin import materialize_once
 
 
 def _reader_fields(schema: str):
@@ -650,8 +651,6 @@ def q_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # registered query: all three table features composed under the oracle gate
 # ---------------------------------------------------------------------------
 
-_COMPOSED_TABLES: dict[str, str] = {}
-
 #: the price window both engines filter on (absolute bounds — the
 #: o_totalprice domain is sf-independent in TPC-H-ish data)
 _PRICE_LO, _PRICE_HI = 1000.0, 50000.0
@@ -665,7 +664,6 @@ def _composed_table(spark: SparkSession, sf_dir: str) -> str:
     alias, defaulted ``status``, clustered + stats); v3 equality-deletes
     every o_orderkey % 5 == 0 key, merge-on-read."""
     from .manifest_table import (
-        _MANIFEST_DIR,
         _ORDERS_V1_SCHEMA,
         _ORDERS_V2_SCHEMA,
         append_evolved,
@@ -673,37 +671,32 @@ def _composed_table(spark: SparkSession, sf_dir: str) -> str:
     )
     from .registry import load_table
 
-    t = _COMPOSED_TABLES.get(sf_dir)
-    if t and os.path.isdir(os.path.join(t, _MANIFEST_DIR)):
-        return t
-    import tempfile
+    def build(t: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        k = F.col("o_orderkey")
+        v1 = orders.where(k % 4 == 0).select(
+            k.cast("long").alias("o_orderkey"),
+            F.col("o_totalprice").cast("double").alias("total"),
+        ).repartitionByRange(8, "total")
+        append_evolved(
+            spark, t, v1, _ORDERS_V1_SCHEMA, txn_id="composed-v1",
+            stat_cols=["o_orderkey", "total"],
+        )
+        v2 = orders.where(k % 4 == 1).select(
+            k.cast("long").alias("o_orderkey"),
+            (F.col("o_totalprice") + 500.0).cast("double").alias("price"),
+            F.lit("live").alias("status"),
+        ).repartitionByRange(4, "price")
+        append_evolved(
+            spark, t, v2, _ORDERS_V2_SCHEMA, reader_schema=_ORDERS_V2_SCHEMA,
+            txn_id="composed-v2", stat_cols=["o_orderkey", "price"],
+        )
+        doomed = orders.where((k % 4 < 2) & (k % 5 == 0)).select(
+            k.cast("long").alias("o_orderkey")
+        )
+        delete_keys(spark, t, "o_orderkey", doomed, txn_id="composed-v3")
 
-    t = tempfile.mkdtemp(prefix="anglerfish_composed_")
-    orders = load_table(spark, sf_dir, "orders")
-    k = F.col("o_orderkey")
-    v1 = orders.where(k % 4 == 0).select(
-        k.cast("long").alias("o_orderkey"),
-        F.col("o_totalprice").cast("double").alias("total"),
-    ).repartitionByRange(8, "total")
-    append_evolved(
-        spark, t, v1, _ORDERS_V1_SCHEMA, txn_id="composed-v1",
-        stat_cols=["o_orderkey", "total"],
-    )
-    v2 = orders.where(k % 4 == 1).select(
-        k.cast("long").alias("o_orderkey"),
-        (F.col("o_totalprice") + 500.0).cast("double").alias("price"),
-        F.lit("live").alias("status"),
-    ).repartitionByRange(4, "price")
-    append_evolved(
-        spark, t, v2, _ORDERS_V2_SCHEMA, reader_schema=_ORDERS_V2_SCHEMA,
-        txn_id="composed-v2", stat_cols=["o_orderkey", "price"],
-    )
-    doomed = orders.where((k % 4 < 2) & (k % 5 == 0)).select(
-        k.cast("long").alias("o_orderkey")
-    )
-    delete_keys(spark, t, "o_orderkey", doomed, txn_id="composed-v3")
-    _COMPOSED_TABLES[sf_dir] = t
-    return t
+    return materialize_once("composed", sf_dir, build)
 
 
 _DSUM = "CAST(CAST(SUM(CAST(price AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)"

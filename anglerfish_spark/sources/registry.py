@@ -43,7 +43,7 @@ _FANOUT_MIN_BYTES = 256 << 10
 _FANOUT_MAX_BYTES = 256 << 20
 
 #: per-process parquet schema cache keyed on file-state METADATA (path,
-#: mtime_ns, size per file — plus each directory's direct entries — and
+#: mtime_ns, size per file — plus every file below each directory — and
 #: the nanosAsLong conf), never data: the first read of a file set infers
 #: the schema once and every later read passes it explicitly, skipping the
 #: JVM-side footer read + schema merge that `spark.read.parquet` otherwise
@@ -57,6 +57,10 @@ _SCHEMA_CACHE: dict[tuple, T.StructType] = {}
 _SCHEMA_CACHE_MAX = 1024
 
 
+def _reraise(e: OSError) -> None:
+    raise e
+
+
 def _paths_key(spark: SparkSession, paths: tuple[str, ...]) -> tuple | None:
     """File-state cache key for a parquet read, or None when unknowable."""
     try:
@@ -66,13 +70,15 @@ def _paths_key(spark: SparkSession, paths: tuple[str, ...]) -> tuple | None:
             st = os.stat(p)
             parts.append((p, st.st_mtime_ns, st.st_size))
             if os.path.isdir(p):
-                # a file rewritten IN PLACE inside a dir leaves the dir
-                # stat unchanged — key on the direct entries too (all our
-                # directory layouts are flat writes + renames)
-                with os.scandir(p) as it:
-                    for e in sorted(it, key=lambda e: e.name):
-                        est = e.stat()
-                        parts.append((e.name, est.st_mtime_ns, est.st_size))
+                # a file rewritten IN PLACE anywhere below a dir leaves
+                # every dir stat above it unchanged (e.g. a leaf of a
+                # partitionBy("src", "cell") tree) — key on every file
+                for root, dirs, names in os.walk(p, onerror=_reraise):
+                    dirs.sort()
+                    for name in sorted(names):
+                        f = os.path.join(root, name)
+                        fst = os.stat(f)
+                        parts.append((os.path.relpath(f, p), fst.st_mtime_ns, fst.st_size))
         return tuple(parts)
     except OSError:
         return None

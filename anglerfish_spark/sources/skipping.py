@@ -47,13 +47,13 @@ from ..registry import query
 from ..session import prepare
 from .manifest_table import (
     _DATA_DIR,
-    _MANIFEST_DIR,
     commit,
     current_version,
     read_manifest,
     snapshot,
     stage_files,
 )
+from .standin import materialize_once
 
 # ---------------------------------------------------------------------------
 # footer stats
@@ -334,8 +334,6 @@ def zorder_compact(
 # registered query
 # ---------------------------------------------------------------------------
 
-_SKIP_TABLES: dict[str, str] = {}
-
 #: the predicate window the query (and the oracle) both use: one year of
 #: ship dates × one octile of the part-key domain (the key domain scales
 #: with sf, so the octile is computed from the data — integer-exact on
@@ -364,27 +362,22 @@ def _skip_table(spark: SparkSession, sf_dir: str) -> str:
     partition/stat columns in stats-friendly physical types)."""
     from .registry import load_table
 
-    t = _SKIP_TABLES.get(sf_dir)
-    if t and os.path.isdir(os.path.join(t, _MANIFEST_DIR)):
-        return t
-    import tempfile
+    def build(t: str) -> None:
+        li = load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey",
+            "l_partkey",
+            F.col("l_shipdate").cast("date").alias("l_shipdate"),
+            "l_quantity",
+            "l_extendedprice",
+        )
+        files = stage_files(li.repartition(16), t)
+        commit_with_stats(
+            spark, t, files, ["l_shipdate", "l_partkey"], expected_version=0,
+            txn_id="skip-v1",
+        )
+        zorder_compact(spark, t, ["l_shipdate", "l_partkey"], n_files=16)
 
-    t = tempfile.mkdtemp(prefix="anglerfish_skip_")
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        "l_partkey",
-        F.col("l_shipdate").cast("date").alias("l_shipdate"),
-        "l_quantity",
-        "l_extendedprice",
-    )
-    files = stage_files(li.repartition(16), t)
-    commit_with_stats(
-        spark, t, files, ["l_shipdate", "l_partkey"], expected_version=0,
-        txn_id="skip-v1",
-    )
-    zorder_compact(spark, t, ["l_shipdate", "l_partkey"], n_files=16)
-    _SKIP_TABLES[sf_dir] = t
-    return t
+    return materialize_once("skip", sf_dir, build)
 
 
 @query(

@@ -539,3 +539,32 @@ class TestCurationMergedCheckpointsR14Opt:
         assert set(dedup.CURATION_STAGE_SECONDS) == {
             "1_exact", "2_near", "3_semantic", "4_substr"
         }
+
+    def test_near_removed_is_subset_of_exact_survivors(self, spark):
+        """The 2_near checkpoint flags removed docs with a LEFT join onto
+        surv1, which is exact only if every distinct LSH doc_b of d1 is
+        in surv1 (removed2 ⊆ surv1).  Build surv1 and d1 as the query
+        does and check the anti-join is empty — and that it is not
+        vacuously so."""
+        from pyspark.sql import Window
+
+        from anglerfish_spark.operators.dedup import lsh_candidate_pairs
+        from anglerfish_spark.operators.text import tokens
+        from anglerfish_spark.session import prepare
+        from anglerfish_spark.sources.registry import load_table
+        from tests.conftest import SF_DIR
+
+        prepare(spark)
+        d = load_table(spark, SF_DIR, "documents", fanout=True)
+        tok = tokens()
+        fp = F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(tok))).cast("binary"))
+        ranked = d.select("doc_id", fp.alias("fp")).withColumn(
+            "rn", F.row_number().over(Window.partitionBy("fp").orderBy("doc_id"))
+        )
+        surv1 = ranked.where(F.col("rn") == 1).select("doc_id")
+        d1 = d.join(surv1, "doc_id", "left_semi")
+        removed2 = (
+            lsh_candidate_pairs(d1).select(F.col("doc_b").alias("doc_id")).distinct()
+        )
+        assert removed2.count() > 0
+        assert removed2.join(surv1, "doc_id", "left_anti").count() == 0

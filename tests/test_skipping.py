@@ -150,7 +150,13 @@ class TestZOrder:
 
 class TestRegisteredQuery:
     def test_skip_table_zorder_beats_arbitrary_layout(self, spark):
+        import os
+
+        from anglerfish_spark.sources import standin
+
         t = _skip_table(spark, SF_DIR)
+        # built through the one memo: under the stand-in root removed at exit
+        assert t.startswith(standin._ROOT + os.sep)
         preds = {
             "l_shipdate": (_SHIP_LO, _SHIP_HI),
             "l_partkey": _part_window(t),

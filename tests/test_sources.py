@@ -275,6 +275,29 @@ class TestReadParquetSchemaCacheR14Opt:
         pq.write_table(pa.table({"a": pa.array([2], pa.int64())}), str(d / "2.parquet"))
         assert read_parquet(spark, str(d)).count() == 2
 
+    def test_nested_leaf_rewrite_invalidates(self, spark, tmp_path):
+        """A file rewritten IN PLACE two levels down (a partitionBy("src",
+        "cell") leaf) touches neither the root's stat nor its direct
+        entries — the key must still change, or a stale schema is served."""
+        import time as _t
+
+        from anglerfish_spark.sources.registry import read_parquet
+
+        d = tmp_path / "tree"
+        leaf = d / "src=a" / "cell=1"
+        leaf.mkdir(parents=True)
+        (d / "_SUCCESS").touch()
+        f = str(leaf / "part-0.parquet")
+        pq.write_table(pa.table({"x": pa.array([1], pa.int64())}), f)
+        assert read_parquet(spark, str(d)).columns == ["x", "src", "cell"]
+        _t.sleep(0.01)
+        pq.write_table(
+            pa.table({"x": pa.array([2], pa.int64()), "y": ["new"]}), f
+        )
+        df = read_parquet(spark, str(d))
+        assert df.columns == ["x", "y", "src", "cell"]
+        assert [tuple(r) for r in df.collect()] == [(2, "new", "a", 1)]
+
     def test_data_never_cached(self, spark, tmp_path):
         """Same file state, different CONTENT bytes is impossible without a
         stat change on a real write path; what matters is that the action
